@@ -14,10 +14,13 @@ object SortBench {
     val parts = if (args.length > 1) args(1).toInt else 16
     val dir = if (args.length > 2) args(2)
       else java.nio.file.Files.createTempDirectory("graft_sortbench").toString
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(16) { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+    }
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()

@@ -193,12 +193,11 @@ object SortOps {
   // -------------------------------------------- binary file I/O, graded
 
   /** The reference's whole FILE pipeline under the oracle: teragen →
-    * raw fixed-width binary sink (RawRecordOutputFormat) → DSv2
-    * `terarecord` scan (record-aligned splits, column pruning, session
-    * Hadoop conf) → count + order-independent modular checksum + key
-    * range. The oracle reproduces the generator arithmetic in SQL, so a
-    * single flipped byte anywhere in the write→read path breaks the
-    * checksum. Record count tracks lineitem, scaling with sf. */
+    * raw fixed-width binary sink (RawRecordOutputFormat) →
+    * `BinaryRecords.read` (record-aligned splits) → count + order-independent
+    * modular checksum + key range. The oracle reproduces the generator
+    * arithmetic in SQL, so a single flipped byte anywhere in the write→read
+    * path breaks the checksum. Record count tracks lineitem, scaling with sf. */
   def qSourceTerarecord(s: SparkSession, d: String): DataFrame = {
     val n = recordCount(s, d)
     // per-application namespace + shutdown-hook cleanup (RelOps.stagingDir)
@@ -208,7 +207,7 @@ object SortOps {
     if (fs.exists(p)) fs.delete(p, true)
     graft.sources.BinaryRecords.write(
       graft.sources.BinaryRecords.teragen(s, n), dir)
-    s.read.format("terarecord").load(dir)
+    graft.sources.BinaryRecords.read(s, dir)
       .select(col("key").cast(StringType).as("key_str"))
       .agg(
         count(lit(1)).as("n_rows"),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +11,16 @@ import graft.sources.BinaryRecords
 
 /** Round-trip + TeraSort property for the fixed-width binary source/sink:
   * gen → write unsorted → terasort → files concatenated in name order are
-  * globally key-sorted, record count and key multiset preserved. */
+  * globally key-sorted, record count and key multiset preserved. Also the
+  * reader's driver-side length check and the sink's single plan run. */
 class BinaryRecordsSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
 
   private def genTeraRecords(n: Int) = BinaryRecords.teragen(spark, n)
+
+  private def records(df: DataFrame): Array[(String, String)] =
+    df.select(col("key").cast("string"), col("payload").cast("string")).collect()
+      .map(r => (r.getString(0), r.getString(1))).sorted
 
   test("binary record sink/scan round-trips 100-byte records") {
     val dir = Files.createTempDirectory("graft_bin").toString
@@ -25,6 +31,34 @@ class BinaryRecordsSpec extends AnyFunSuite {
     val r = back.select(length(col("key")).as("lk"), length(col("payload")).as("lp"))
       .distinct().collect()
     assert(r.length === 1 && r(0).getInt(0) === 10 && r(0).getInt(1) === 90)
+    assert(records(back).sameElements(records(genTeraRecords(5000))),
+      "(key, payload) multiset read back differs from teragen's")
+  }
+
+  test("read rejects a file that is not a whole number of records, on the driver") {
+    val dir = Files.createTempDirectory("graft_bin_bad")
+    Files.write(dir.resolve("part-00000"), new Array[Byte](200))
+    Files.write(dir.resolve("part-00001"), new Array[Byte](250))
+    // names binaryRecords skips itself are not checked
+    Files.write(dir.resolve("_SUCCESS"), new Array[Byte](7))
+    Files.write(dir.resolve(".inprogress"), new Array[Byte](12))
+    val e = intercept[IllegalArgumentException](BinaryRecords.read(spark, dir.toString))
+    assert(e.getMessage.contains("part-00001") && e.getMessage.contains("length 250"),
+      e.getMessage)
+    Files.delete(dir.resolve("part-00001"))
+    assert(BinaryRecords.read(spark, dir.toString).count() === 2)
+  }
+
+  test("write runs its input plan once: each row is seen by the sample and the map, no more") {
+    val n = 2000
+    val seen = spark.sparkContext.longAccumulator("rows_seen")
+    val tap = udf { (k: Array[Byte]) => seen.add(1); k }.asNondeterministic()
+    val sorted = genTeraRecords(n)
+      .select(tap(col("key")).as("key"), col("payload"))
+      .repartitionByRange(4, col("key"))
+      .sortWithinPartitions(col("key"))
+    BinaryRecords.write(sorted, Files.createTempDirectory("graft_bin_once").toString + "/out")
+    assert(seen.value === 2L * n)
   }
 
   test("terasort over binary files: name-ordered concatenation is globally sorted") {

@@ -31,11 +31,6 @@ else
   git -C "$ROOT" worktree add --detach "$CTRL_DIR" "$CTRL_SHA" >&2
 fi
 
-# Compile/products, NOT compile: `compile` alone does not copy
-# src/main/resources into the classes dir, so a fresh control worktree
-# would lack META-INF/services/...DataSourceRegister and every
-# format("terarecord") query would fail fast — recording a bogus-small
-# control time (this bit round 11: a phantom 1.83× "regression").
 echo "[ab] building current tree" >&2
 (cd "$ROOT" && sbt -batch Compile/products >/dev/null)
 echo "[ab] building control ($CTRL_REF = ${CTRL_SHA:0:9})" >&2
